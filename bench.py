@@ -87,11 +87,11 @@ def _merge_sentinel(spark, sf_dir: str) -> dict[str, float]:
     in 8 key-banded files with stats, then a 1-band re-price merge runs
     min-of-3 — each attempt against a fresh zero-copy SHALLOW CLONE so
     every run measures the identical (prebuilt-table, fixed-band) merge,
-    never a mutated snapshot. Catches regressions in the candidate-
-    pruning ladder, the phase-1 tag scan, and the commit path that the
-    headline merges (which rebuild their tables inside the timed query)
-    can mask. Excluded from the headline total like the checkpoint
-    sentinels."""
+    never a mutated snapshot. This is the bench's real merge signal: the
+    headline merge queries reuse a table `_lakehouse_table` memoizes, so
+    a regression in the candidate-pruning ladder, the phase-1 tag scan or
+    the commit path shows here first. Excluded from the headline total
+    like the checkpoint sentinels."""
     import tempfile
 
     from pyspark.sql import functions as F

@@ -10,6 +10,8 @@ configuration a 100 TB deployment needs from day one:
 - UTC session timezone (oracle comparisons + cross-region correctness)
 - Arrow for every Python<->JVM data exchange
 - broadcast threshold raised so dimension tables never shuffle
+- Python workers forked from ``datalake_brief_spark.daemon``, which skips
+  the per-task re-read of unchanged zip archives on sys.path
 """
 
 from __future__ import annotations
@@ -43,7 +45,12 @@ _DEFAULTS: dict[str, str] = {
     # own row-group skipping and txlog's stats-in-log file pruning on any
     # timestamp column.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    "spark.python.daemon.module": "datalake_brief_spark.daemon",
 }
+
+# Directory holding the package: Python workers need it on their path to
+# import the daemon above (and the engine inside UDFs) from any cwd.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -73,6 +80,9 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
